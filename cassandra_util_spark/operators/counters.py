@@ -115,15 +115,6 @@ class CounterStore:
         inputs = self.store.live_runs()
         if len(inputs) < 2:
             return None
-        folded = self._sum_runs(spark, inputs)
-        run = f"c{uuid.uuid4().hex[:12]}"
-        path = os.path.join(self.store.root, run)
-        from cassandra_util_spark.core.table import KeyedTable
-
-        KeyedTable(folded, self.store.meta).clustered().write.parquet(path)
-        self.store._write_stats(spark, path)
-        with self.store.locked():
-            live = self.store.live_runs()
-            survivors = [r for r in live if r not in set(inputs)]
-            self.store._swap_manifest([*survivors, run])
-        return run
+        return self.store._rewrite(
+            spark, self._sum_runs(spark, inputs), inputs, run=f"c{uuid.uuid4().hex[:12]}"
+        )

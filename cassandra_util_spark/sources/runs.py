@@ -1,19 +1,34 @@
-"""LSM-style run store: overlapping sorted runs + size-tiered compaction.
+"""LSM-style run store: overlapping sorted runs, compaction strategies that
+only PLAN, and one merge/rewrite/commit path that executes every plan.
 
 The reference's retention engine runs INSIDE a real compaction strategy —
-``DeletingCompactionStrategy`` wraps an underlying strategy (size-tiered by
-default) and filters rows while that strategy merges overlapping SSTables
+``DeletingCompactionStrategy`` wraps an underlying strategy and filters rows
+while that strategy merges overlapping SSTables
 (DeletingCompactionStrategy.java:102-126 builds the scanner list the
-underlying strategy chose).  ``SnapshotStore`` models the atomic-swap side
-of that world; this module models the other half: a table as a SET of
-overlapping runs, readable without merging eagerly, with a maintenance
-``compact()`` that applies Cassandra's size-tiered bucketing
-(SizeTieredCompactionStrategy semantics: bucket runs of similar size, merge
-buckets that reach ``min_threshold``) — and optionally the retention
-filter, which is exactly where the reference hooks its convictors.
+underlying strategy chose).  The wrapped strategy only decides WHICH runs
+merge; the merge and the retention filter are the same for every strategy.
+This module keeps that split:
+
+- Strategies are pure planners over driver-side run metadata (sizes,
+  levels, per-run skip-index stats): :func:`size_tiered_plan` (STCS
+  buckets of similar-size runs), :func:`leveled_plan` (LCS: drain a full
+  L0, or one incremental victim from an over-full level) and
+  :func:`time_window_plan` (TWCS: never merge across time windows).
+- One path executes every plan.  ``RunStore._merge`` reads the inputs,
+  LWW-merges them and applies the retention ``keep_expr`` — exactly where
+  the reference hooks its convictors.  ``RunStore._rewrite`` writes the
+  merged run clustered by key, records its skip index and publishes it.
+  ``RunStore._commit`` is the one locked manifest swap that appends,
+  compactions and expired-window drops all publish through.  Leveled
+  compaction differs only in its write: a range-split staging write whose
+  chunks each install as one run.
+
+Every run's ``_STATS.json`` skip index (row count plus min/max of every
+atomic column) comes from its parquet footers — a driver-side metadata
+walk, never a Spark job.
 
 Scale notes: planning is O(#runs) driver-side file metadata — never data.
-A merge reads only the bucket's runs (multi-file scan) and shuffles once on
+A merge reads only the planned runs (multi-file scan) and shuffles once on
 the primary key (the LWW window).  Readers always see a consistent run set:
 the live-run manifest swaps atomically via the same rename protocol as
 ``_CURRENT``.
@@ -25,7 +40,7 @@ import os
 import tempfile
 import time
 from contextlib import contextmanager
-from typing import Callable, Optional
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -81,11 +96,7 @@ class RunStore:
         return os.path.join(self.root, "_RUNS")
 
     def live_runs(self) -> list[str]:
-        try:
-            with open(self._manifest) as f:
-                return [ln.split(" ")[0] for ln in f.read().split("\n") if ln]
-        except FileNotFoundError:
-            return []
+        return list(self.live_levels())
 
     def live_levels(self) -> dict[str, int]:
         """Run → LSM level.  Manifest v1 lines (bare names, every store
@@ -151,6 +162,54 @@ class RunStore:
             f.write("\n".join(f"{r} {lv.get(r, 0)}" for r in runs))
         os.replace(tmp, self._manifest)  # atomic on POSIX
 
+    def _commit(
+        self, add: Sequence[str] = (), drop: Sequence[str] = (), level: int = 0
+    ) -> None:
+        """Publish under the manifest lock, re-reading the live set: a
+        writer that appended between this caller's plan and its swap must
+        not be dropped by a stale-list swap.  Removes ``drop``, appends
+        ``add`` at ``level``; a run already live is left as it is, which
+        keeps a retried named ``append_run`` a no-op."""
+        drop = set(drop)
+        with self.locked():
+            live = [r for r in self.live_runs() if r not in drop]
+            new = [r for r in add if r not in live]
+            self._swap_manifest([*live, *new], {r: level for r in new})
+
+    def _merge(
+        self,
+        spark: SparkSession,
+        runs: Sequence[str],
+        keep_expr: Optional[Callable[[DataFrame], DataFrame]] = None,
+    ) -> DataFrame:
+        """LWW-merge ``runs`` (schema-evolution tolerant), then apply the
+        retention ``keep_expr`` — the deleting-compaction hook every
+        strategy shares."""
+        from cassandra_util_spark.operators.merge import merge_snapshots
+
+        merged = merge_snapshots(
+            [spark.read.parquet(os.path.join(self.root, r)) for r in runs],
+            self.meta,
+            allow_schema_evolution=True,
+        )
+        return merged if keep_expr is None else keep_expr(merged)
+
+    def _rewrite(
+        self,
+        spark: SparkSession,
+        df: DataFrame,
+        replaces: Sequence[str],
+        run: Optional[str] = None,
+    ) -> str:
+        """Write ``df`` as ONE key-clustered run, record its skip index,
+        and publish it in place of ``replaces``.  Returns the run name."""
+        run = run or self._next_run()
+        path = os.path.join(self.root, run)
+        KeyedTable(df, self.meta).clustered().write.parquet(path)
+        self._write_stats(spark, path)
+        self._commit([run], drop=replaces)
+        return run
+
     def _next_run(self) -> str:
         existing = [
             d for d in os.listdir(self.root) if d.startswith("r") and d[1:].isdigit()
@@ -180,7 +239,7 @@ class RunStore:
         """Write a new run (clustered by the key layout) and publish it.
         The write is invisible until the manifest swap — a failed job
         leaves a dead directory, never a half-visible run.  Key-range stats
-        are computed from the WRITTEN parquet (a column-pruned read-back,
+        are computed from the WRITTEN parquet's footers (no Spark job,
         never a recompute of the input lineage) so leveling and pruned
         reads can reason about the run without scanning data.
 
@@ -223,13 +282,7 @@ class RunStore:
         else:
             KeyedTable(df, self.meta).clustered().write.mode(mode).parquet(path)
         self._write_stats(df.sparkSession, path, zorder_by=zorder_by)
-        # publish under the manifest lock, re-reading the live set: a second
-        # writer may have appended between our read and our swap, and a
-        # stale-list swap would silently drop their run from the manifest
-        with self.locked():
-            live = self.live_runs()
-            if run not in live:
-                self._swap_manifest([*live, run])
+        self._commit([run])
         return run
 
     # -- key-range stats (leveling + pruned reads) --------------------------
@@ -479,14 +532,14 @@ class RunStore:
         bounded = key_lower is not None or key_upper is not None
         runs = self.prune_runs(key_lower, key_upper) if bounded else self.live_runs()
         for col, (lo, hi) in (extra_bounds or {}).items():
-            runs = [r for r in runs if r in set(self.prune_runs(lo, hi, column=col))]
+            keep = set(self.prune_runs(lo, hi, column=col))
+            runs = [r for r in runs if r in keep]
         if not runs:
-            if self.live_runs():
-                # everything pruned: an empty view with the store's schema
-                any_run = self.live_runs()[0]
-                empty = spark.read.parquet(os.path.join(self.root, any_run)).limit(0)
-                return empty
-            raise ValueError(f"run store at {self.root} has no runs")
+            live = self.live_runs()
+            if not live:
+                raise ValueError(f"run store at {self.root} has no runs")
+            # everything pruned: an empty view with the store's schema
+            return spark.read.parquet(os.path.join(self.root, live[0])).limit(0)
         dfs = [spark.read.parquet(os.path.join(self.root, r)) for r in runs]
         if bounded or extra_bounds:
             cond = F.lit(True)
@@ -520,29 +573,13 @@ class RunStore:
         Returns the new run names (empty when no bucket qualifies).
         The read view is invariant under compaction (minus convicted rows).
         """
-        from cassandra_util_spark.operators.merge import merge_snapshots
-
         plan = size_tiered_plan(
             self.run_sizes(), min_threshold=min_threshold, max_threshold=max_threshold
         )
-        new_runs: list[str] = []
-        for bucket in plan:
-            dfs = [spark.read.parquet(os.path.join(self.root, r)) for r in bucket]
-            merged = merge_snapshots(dfs, self.meta, allow_schema_evolution=True)
-            if keep_expr is not None:
-                merged = keep_expr(merged)
-            run = self._next_run()
-            path = os.path.join(self.root, run)
-            KeyedTable(merged, self.meta).clustered().write.parquet(path)
-            self._write_stats(spark, path)
-            # publish under the manifest lock, re-reading the live set: a
-            # writer appending concurrently with this maintenance pass must
-            # not have its just-published run dropped by a stale-list swap
-            with self.locked():
-                live = [r for r in self.live_runs() if r not in bucket]
-                self._swap_manifest([*live, run])
-            new_runs.append(run)
-        return new_runs
+        return [
+            self._rewrite(spark, self._merge(spark, bucket, keep_expr), bucket)
+            for bucket in plan
+        ]
 
     def compact_leveled(
         self,
@@ -574,17 +611,17 @@ class RunStore:
 
         The split writes one staging job (`repartitionByRange` on the
         primary key, so chunk boundaries come from range sampling), then
-        registers each chunk directory as a run — data moves once.
+        registers each chunk directory as a run — data moves once — with
+        the same footer-derived skip index every other run carries.
         Returns the new run names (empty when no level triggers).
         """
         import shutil
 
         from pyspark.sql import functions as F
 
-        from cassandra_util_spark.operators.merge import merge_snapshots
-
+        sizes = self.run_sizes()
         job = leveled_plan(
-            self.run_sizes(),
+            sizes,
             self.live_levels(),
             run_target_bytes=run_target_bytes,
             min_threshold=min_threshold,
@@ -598,11 +635,7 @@ class RunStore:
         if job is None:
             return []
         inputs, target_level = job
-        sizes = self.run_sizes()
-        dfs = [spark.read.parquet(os.path.join(self.root, r)) for r in inputs]
-        merged = merge_snapshots(dfs, self.meta, allow_schema_evolution=True)
-        if keep_expr is not None:
-            merged = keep_expr(merged)
+        merged = self._merge(spark, inputs, keep_expr)
         in_bytes = sum(sizes[r] for r in inputs)
         n_out = max(1, -(-in_bytes // run_target_bytes))  # ceil: runs stay <= target
         order = [F.col(c) for c in self.meta.primary_key]
@@ -614,64 +647,20 @@ class RunStore:
             .write.partitionBy("__chunk")
             .parquet(stage, mode="overwrite")
         )
-        new_runs: list[str] = []
-        levels: dict[str, int] = {}
         chunks = sorted(
             (d for d in os.listdir(stage) if d.startswith("__chunk=")),
             key=lambda d: int(d.split("=")[1]),
         )
-        # ONE stats job for every chunk (groupBy the partition column of the
-        # staged layout) instead of one read-back job per chunk — at hundreds
-        # of chunks per merge the per-job latency dominated the merge itself.
-        # Aggregates min/max for EVERY atomic column so leveled chunks carry
-        # the same skip index appends do (round 6).
-        c = self._range_col
-        staged = spark.read.option("basePath", stage).parquet(
-            *(os.path.join(stage, d) for d in chunks)
-        )
-        atomic = [
-            f.name
-            for f in staged.schema.fields
-            if f.name != "__chunk"
-            and f.dataType.typeName() not in ("array", "map", "struct", "binary")
-        ]
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for col in atomic:
-            aggs += [F.min(col).alias(f"__mn_{col}"), F.max(col).alias(f"__mx_{col}")]
-        stat_rows = {
-            int(r["__chunk"]): r
-            for r in staged.groupBy("__chunk").agg(*aggs).collect()
-        }
-        import json as _json
-
+        new_runs: list[str] = []
         for d in chunks:
             run = self._next_run()
             path = os.path.join(self.root, run)
             os.replace(os.path.join(stage, d), path)
-            row = stat_rows[int(d.split("=")[1])]
-            with open(os.path.join(path, "_STATS.json"), "w") as f:
-                _json.dump(
-                    {
-                        "column": c,
-                        "min": row[f"__mn_{c}"],
-                        "max": row[f"__mx_{c}"],
-                        "rows": row["__rows"],
-                        "columns": {
-                            col: {"min": row[f"__mn_{col}"], "max": row[f"__mx_{col}"]}
-                            for col in atomic
-                        },
-                    },
-                    f,
-                    default=str,
-                )
+            self._write_stats(spark, path)
             new_runs.append(run)
-            levels[run] = target_level
-            # publish incrementally-named runs only after ALL chunks land
+        # publish the incrementally-named runs only after ALL chunks land
         shutil.rmtree(stage, ignore_errors=True)
-        # manifest lock: see append_run/compact — concurrent appends survive
-        with self.locked():
-            live = [r for r in self.live_runs() if r not in set(inputs)]
-            self._swap_manifest([*live, *new_runs], levels=levels)
+        self._commit(new_runs, drop=inputs, level=target_level)
         return new_runs
 
 
@@ -798,27 +787,13 @@ def compact_time_windowed(
     compaction hook) and atomically replace the inputs.  The merged run's
     recomputed stats land in the same window, so a second round finds the
     window at one run and stops — the loop converges per window."""
-    from cassandra_util_spark.core.table import KeyedTable
-    from cassandra_util_spark.operators.merge import merge_snapshots
-
     plan = time_window_plan(
         store.run_stats(), store.live_runs(), time_col, window_us, min_threshold
     )
-    new_runs: list[str] = []
-    for bucket in plan:
-        dfs = [spark.read.parquet(os.path.join(store.root, r)) for r in bucket]
-        merged = merge_snapshots(dfs, store.meta, allow_schema_evolution=True)
-        if keep_expr is not None:
-            merged = keep_expr(merged)
-        run = store._next_run()
-        path = os.path.join(store.root, run)
-        KeyedTable(merged, store.meta).clustered().write.parquet(path)
-        store._write_stats(spark, path)
-        with store.locked():
-            live = [r for r in store.live_runs() if r not in set(bucket)]
-            store._swap_manifest([*live, run])
-        new_runs.append(run)
-    return new_runs
+    return [
+        store._rewrite(spark, store._merge(spark, bucket, keep_expr), bucket)
+        for bucket in plan
+    ]
 
 
 def drop_expired_windows(store: RunStore, time_col: str, cutoff: int) -> list[str]:
@@ -839,15 +814,8 @@ def drop_expired_windows(store: RunStore, time_col: str, cutoff: int) -> list[st
         if s is not None and isinstance(s.get("max"), int) and s["max"] < cutoff:
             victims.append(r)
     if victims:
-        with store.locked():
-            store._swap_manifest(
-                [r for r in store.live_runs() if r not in set(victims)]
-            )
+        store._commit(drop=victims)
     return victims
-
-
-def _dir_mtime(path: str) -> float:
-    return os.path.getmtime(path)
 
 
 def vacuum_dead_runs(store: RunStore, min_age_s: float = 3600.0) -> list[str]:
@@ -864,12 +832,12 @@ def vacuum_dead_runs(store: RunStore, min_age_s: float = 3600.0) -> list[str]:
 
     live = set(store.live_runs())
     removed: list[str] = []
-    now = __import__("time").time()
+    now = time.time()
     for d in sorted(os.listdir(store.root)):
         if not (d[:1] in ("r", "b") and d[1:].isdigit()) or d in live:
             continue
         path = os.path.join(store.root, d)
-        if now - _dir_mtime(path) < min_age_s:
+        if now - os.path.getmtime(path) < min_age_s:
             continue
         shutil.rmtree(path)
         removed.append(d)

@@ -9,6 +9,7 @@ merge-on-read, and compaction invariance — plus the manifest-lock fix that
 makes two interleaved appends both survive the manifest.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from cassandra_util_spark.core.table import TableMeta
@@ -198,25 +199,51 @@ def test_counter_compact_crash_leaves_totals_intact(spark, tmp_path):
     assert len(cs.store.live_runs()) == 1
 
 
-def test_compaction_swap_preserves_concurrent_append(spark, tmp_path):
+@pytest.mark.parametrize("strategy", ["stcs", "leveled", "twcs", "counter"])
+def test_compaction_swap_preserves_concurrent_append(spark, tmp_path, strategy):
     """Maintenance passes publish under the same manifest lock as appends:
     a run published between a compaction's input-read and its swap must
     survive.  Simulated by appending through a second handle after the
-    compaction inputs are fixed (the lock makes the swap re-read live)."""
-    from cassandra_util_spark.core.table import TableMeta
-    from cassandra_util_spark.sources.runs import RunStore
+    compaction inputs are fixed (the lock makes the swap re-read live).
+    Every strategy publishes through the same commit path, so each one is
+    driven through the same interleave."""
+    from cassandra_util_spark.sources.runs import compact_time_windowed
 
-    meta = TableMeta(("k",), (), "wt")
-    s_maint = RunStore(str(tmp_path / "runs"), meta)
-    s_writer = RunStore(str(tmp_path / "runs"), meta)
     df = spark.range(50).selectExpr("id as k", "id as wt")
-    for _ in range(4):
-        s_maint.append_run(df)
+    late_df = df.selectExpr("k + 100 as k", "wt")
+    root = str(tmp_path / "runs")
+    if strategy == "counter":
+        cs_maint = CounterStore(root, ["k"], ["wt"])
+        cs_writer = CounterStore(root, ["k"], ["wt"])
+        s_maint = cs_maint.store
+        for _ in range(4):
+            cs_maint.append_increments(df)
+        late = lambda: cs_writer.append_increments(late_df, name="late")
+        view = lambda: cs_maint.totals(spark)
+        compact = lambda: cs_maint.compact(spark)
+    else:
+        meta = TableMeta(("k",), (), "wt")
+        s_maint = RunStore(root, meta)
+        s_writer = RunStore(root, meta)
+        for _ in range(4):
+            s_maint.append_run(df)
+        late = lambda: s_writer.append_run(late_df, name="late")
+        view = lambda: s_maint.read_merged(spark)
+        compact = {
+            "stcs": lambda: s_maint.compact(spark, min_threshold=4),
+            "leveled": lambda: s_maint.compact_leveled(spark, min_threshold=4),
+            "twcs": lambda: compact_time_windowed(
+                s_maint, spark, time_col="wt", window_us=100, min_threshold=4
+            ),
+        }[strategy]
+        if strategy == "twcs":
+            # a run in a NEWER window: the newest window is never compacted
+            s_maint.append_run(df.selectExpr("k + 200 as k", "wt + 100 as wt"))
+    before = view().count()
 
     # inject the interleaved append INSIDE the compaction, after its plan
     # fixed the inputs but before its manifest swap: hook the stats write
     # of the merged output (the last step before publish)
-    late_df = df.selectExpr("k + 100 as k", "wt")
     orig_write_stats = s_maint._write_stats
     fired = []
 
@@ -224,11 +251,11 @@ def test_compaction_swap_preserves_concurrent_append(spark, tmp_path):
         orig_write_stats(spark_arg, path)
         if not fired:
             fired.append(True)
-            s_writer.append_run(late_df, name="late")
+            late()
 
     s_maint._write_stats = hook
-    new = s_maint.compact(spark, min_threshold=4)
+    new = compact()
     # before the lock fix, the stale-list swap dropped "late" from the
     # manifest (its data directory orphaned) — now both survive
     assert new and fired and "late" in s_maint.live_runs()
-    assert s_maint.read_merged(spark).count() == 100  # 50 keys + 50 shifted
+    assert view().count() == before + 50  # the late run's 50 shifted keys

@@ -345,6 +345,81 @@ def test_skip_index_prunes_on_non_key_columns(spark, tmp_path):
     assert {r["event_id"] - r["user_id"] for r in both.collect()} == {3000}
 
 
+def test_extra_bound_prunes_once_per_bound(spark, tmp_path):
+    """``read_merged(extra_bounds=...)`` consults the skip index ONCE per
+    bound, not once per candidate run: every ``prune_runs`` call re-reads
+    every run's _STATS.json, so a per-run call made the planning cost
+    quadratic in the run count."""
+    store = RunStore(str(tmp_path / "runs"), TableMeta(("user_id",), (), "writetime"))
+    for day in (1, 2, 3):
+        store.append_run(
+            spark.range(10).selectExpr("id as user_id", f"{day}L as day", "id as writetime")
+        )
+    calls = []
+    real_prune = store.prune_runs
+
+    def counting_prune(*args, **kwargs):
+        calls.append(kwargs.get("column"))
+        return real_prune(*args, **kwargs)
+
+    store.prune_runs = counting_prune
+    assert store.read_merged(spark, extra_bounds={"day": (2, 2)}).count() == 10
+    assert calls == ["day"]
+
+
+def _jobs_in(spark, group: str, fn):
+    """Run ``fn`` under a fresh Spark job group; return (result, job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_compaction_round_job_ceilings(spark, tmp_path):
+    """Deterministic-counter guard for the shared compaction path: one
+    leveled round (two-chunk range split) and one size-tiered round on a
+    fixed small store launch at most the pinned number of Spark jobs.
+    Every output run's skip index comes from parquet footers (no job), so
+    a stats read-back creeping back into a round fails here instead of
+    hiding in wall-clock noise.  The ceilings are the measured counts."""
+    import uuid
+
+    meta = TableMeta(("user_id",), ("event_id",), "writetime")
+
+    def seeded(name, n_runs):
+        store = RunStore(str(tmp_path / name), meta)
+        for day in range(n_runs):
+            store.append_run(
+                spark.range(400).selectExpr(
+                    "id as user_id",
+                    f"id + {day * 1000} as event_id",
+                    f"{day}L as day",
+                    "id as writetime",
+                )
+            )
+        return store
+
+    leveled = seeded("leveled", 2)
+    new, jobs = _jobs_in(
+        spark,
+        f"leveled-{uuid.uuid4().hex}",
+        lambda: leveled.compact_leveled(spark, run_target_bytes=8 << 10, min_threshold=2),
+    )
+    assert len(new) == 2, new
+    assert jobs <= 6, jobs
+
+    tiered = seeded("tiered", 4)
+    new, jobs = _jobs_in(
+        spark, f"stcs-{uuid.uuid4().hex}", lambda: tiered.compact(spark, min_threshold=4)
+    )
+    assert len(new) == 1, new
+    assert jobs <= 7, jobs
+
+
 def test_zordered_append_same_view_and_2d_file_pruning(spark, tmp_path):
     """``append_run(zorder_by=...)`` changes the FILE layout, never the
     view: the LWW merge over a z-ordered store is row-identical to the

@@ -9,6 +9,7 @@ range-split non-overlapping runs, bounded reads pruning to ~one run per
 level, and the retention keep-expression applied during leveled merges.
 """
 
+import json
 import os
 
 import pytest
@@ -400,6 +401,11 @@ def test_leveled_outputs_keep_full_skip_index(spark, tmp_path):
     stats = store.run_stats()
     for r in new:
         assert "columns" in stats[r] and "day" in stats[r]["columns"], stats[r]
+        # footer-derived stats equal a Spark aggregate over the chunk,
+        # normalized like test_footer_stats_byte_compatible_with_spark_agg
+        rows, cols = store._spark_stats(spark, os.path.join(store.root, r))
+        agg = json.loads(json.dumps({"rows": rows, "columns": cols}, default=str))
+        assert {k: stats[r][k] for k in ("rows", "columns")} == agg, r
     # the non-key-column read path still prunes/filters correctly
     got = store.read_merged(spark, extra_bounds={"day": (2, 2)})
     assert got.count() == 400
