@@ -34,8 +34,8 @@ SSTable counts.
 
 from __future__ import annotations
 
-import os
 import uuid
+from functools import reduce
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,12 +82,7 @@ class CounterStore:
     # -- read path ----------------------------------------------------------
 
     def _sum_runs(self, spark: SparkSession, runs: Sequence[str]) -> DataFrame:
-        dfs = [
-            spark.read.parquet(os.path.join(self.store.root, r)) for r in runs
-        ]
-        merged = dfs[0]
-        for d in dfs[1:]:
-            merged = merged.unionByName(d)
+        merged = reduce(DataFrame.unionByName, self.store._read(spark, runs))
         return merged.groupBy(*self.keys).agg(
             *[F.sum(c).alias(c) for c in self.counters]
         )

@@ -16,9 +16,11 @@ import os
 import sys
 import tempfile
 import time
+from functools import reduce
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cassandra_util_spark.core.session import get_spark
@@ -214,8 +216,8 @@ elif which == "ingest":
         idx_runs = index_store.live_runs()
         if idx_runs:
             with step("2-idx-read"):
-                idx = spark.read.parquet(
-                    *(os.path.join(index_store.root, r) for r in idx_runs)
+                idx = reduce(
+                    DataFrame.unionByName, index_store._read(spark, idx_runs)
                 )
             with step("3-digest-anti"):
                 kept = (

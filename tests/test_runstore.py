@@ -10,6 +10,7 @@ during the merge exactly like a convictor.
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cassandra_util_spark.core.table import TableMeta
 from cassandra_util_spark.sources.runs import RunStore, size_tiered_plan
@@ -383,9 +384,11 @@ def test_compaction_round_job_ceilings(spark, tmp_path):
     """Deterministic-counter guard for the shared compaction path: one
     leveled round (two-chunk range split) and one size-tiered round on a
     fixed small store launch at most the pinned number of Spark jobs.
-    Every output run's skip index comes from parquet footers (no job), so
-    a stats read-back creeping back into a round fails here instead of
-    hiding in wall-clock noise.  The ceilings are the measured counts."""
+    Every output run's skip index comes from parquet footers (no job) and
+    every input is read with its recorded schema (no inference job), so a
+    stats read-back or a per-run schema inference creeping back into a
+    round fails here instead of hiding in wall-clock noise.  The ceilings
+    are the measured counts."""
     import uuid
 
     meta = TableMeta(("user_id",), ("event_id",), "writetime")
@@ -410,14 +413,14 @@ def test_compaction_round_job_ceilings(spark, tmp_path):
         lambda: leveled.compact_leveled(spark, run_target_bytes=8 << 10, min_threshold=2),
     )
     assert len(new) == 2, new
-    assert jobs <= 6, jobs
+    assert jobs <= 4, jobs
 
     tiered = seeded("tiered", 4)
     new, jobs = _jobs_in(
         spark, f"stcs-{uuid.uuid4().hex}", lambda: tiered.compact(spark, min_threshold=4)
     )
     assert len(new) == 1, new
-    assert jobs <= 7, jobs
+    assert jobs <= 3, jobs
 
 
 def test_zordered_append_same_view_and_2d_file_pruning(spark, tmp_path):
@@ -524,6 +527,9 @@ def test_footer_stats_byte_compatible_with_spark_agg(spark, tmp_path):
     with open(os.path.join(path, "_STATS.json")) as f:
         st = json.load(f)
     assert st["columns"] == nf["columns"] and st["rows"] == nf["rows"]
+    # both paths record the same schema, the one a read infers
+    assert footer[2] == agg[2]
+    assert StructType.fromJson(st["schema"]) == spark.read.parquet(path).schema
 
     # NaN-bearing float column: Spark's parquet writer records NaN as a
     # stat bound, and folding NaN through </> (always false) could
@@ -539,3 +545,201 @@ def test_footer_stats_byte_compatible_with_spark_agg(spark, tmp_path):
     # a bound far above the data prunes the clean run via its dbl stats
     # but must KEEP the NaN run (no stats = non-prunable)
     assert store.prune_runs(1e12, 2e12, column="dbl") == [run2]
+
+
+def _typed_batch(spark, n, offset=0, wt=0):
+    """``n`` rows over the column shapes the stores carry: a timestamp_ntz,
+    an ``array<int>`` (the windows store's ``token_ids``) and a nullable
+    string that is null on every other row."""
+    return spark.range(n).selectExpr(
+        "id as user_id",
+        f"id + {offset} as event_id",
+        f"id + {wt} as writetime",
+        "cast(timestamp_seconds(id) as timestamp_ntz) as tn",
+        "array(cast(id as int), cast(id + 1 as int)) as token_ids",
+        "case when id % 2 = 0 then null else cast(id as string) end as note",
+    )
+
+
+def _assert_schema_recorded(spark, store, runs):
+    import os
+
+    assert runs
+    for run in runs:
+        rec = StructType.fromJson(store.run_stats()[run]["schema"])
+        assert rec == spark.read.parquet(os.path.join(store.root, run)).schema, run
+        assert "__chunk" not in rec.fieldNames()
+
+
+def test_recorded_schema_equals_inferred_for_every_run_kind(spark, tmp_path):
+    """Every run the store produces records, in its ``_STATS.json``, exactly
+    the schema a ``spark.read.parquet(run)`` would infer — the schema
+    ``_read`` hands Spark instead of inferring it.  Covers appends (plain
+    and z-ordered), the size-tiered, time-window and counter rewrites,
+    and leveled chunks (written with ``partitionBy("__chunk")`` and then
+    renamed, so the column must not leak into the recorded schema)."""
+    from cassandra_util_spark.operators.counters import CounterStore
+    from cassandra_util_spark.sources.runs import compact_time_windowed
+
+    meta = TableMeta(("user_id",), ("event_id",), "writetime")
+    stcs = RunStore(str(tmp_path / "stcs"), meta)
+    plain = [stcs.append_run(_typed_batch(spark, 200, day * 1000)) for day in (0, 1)]
+    zord = [
+        stcs.append_run(_typed_batch(spark, 200, day * 1000), zorder_by=["user_id", "event_id"])
+        for day in (2, 3)
+    ]
+    _assert_schema_recorded(spark, stcs, plain + zord)
+    assert StructType.fromJson(stcs.run_stats()[plain[0]]["schema"]).simpleString() == (
+        "struct<user_id:bigint,event_id:bigint,writetime:bigint,"
+        "tn:timestamp_ntz,token_ids:array<int>,note:string>"
+    )
+    _assert_schema_recorded(spark, stcs, stcs.compact(spark, min_threshold=2))
+
+    twcs = RunStore(str(tmp_path / "twcs"), meta)
+    for day, wt in ((0, 0), (1, 0), (2, 5000)):
+        twcs.append_run(_typed_batch(spark, 100, day * 1000, wt))
+    new = compact_time_windowed(twcs, spark, time_col="writetime", window_us=1000)
+    _assert_schema_recorded(spark, twcs, new)
+
+    leveled = RunStore(str(tmp_path / "leveled"), meta)
+    for day in (0, 1):
+        leveled.append_run(_typed_batch(spark, 400, day * 1000))
+    new = leveled.compact_leveled(spark, run_target_bytes=8 << 10, min_threshold=2)
+    assert len(new) >= 2, new
+    _assert_schema_recorded(spark, leveled, new)
+
+    counters = CounterStore(str(tmp_path / "counters"), ["k"], ["n"])
+    for i in range(2):
+        counters.append_increments(
+            spark.createDataFrame([("a", i), ("b", None)], "k string, n bigint")
+        )
+    _assert_schema_recorded(spark, counters.store, counters.store.live_runs())
+    _assert_schema_recorded(spark, counters.store, [counters.compact(spark)])
+
+
+def _overlapping_store(spark, root, n_runs=3):
+    store = RunStore(root, TableMeta(("user_id",), ("event_id",), "writetime"))
+    for day in range(n_runs):
+        store.append_run(_typed_batch(spark, 200, (day % 2) * 1000, day))
+    return store
+
+
+def test_read_job_ceilings(spark, tmp_path):
+    """A bounded read over several pruned-in runs, and a full read, run
+    only the merge's own jobs: every run is scanned with its recorded
+    schema, in one multi-path scan, so no read pays a schema-inference job
+    per run (k + 2 jobs for k runs before runs carried their schema)."""
+    import uuid
+
+    store = _overlapping_store(spark, str(tmp_path / "runs"), n_runs=4)
+    assert len(store.prune_runs(10, 60)) >= 3
+    rows, jobs = _jobs_in(
+        spark,
+        f"bounded-{uuid.uuid4().hex}",
+        lambda: store.read_merged(spark, key_lower=10, key_upper=60).collect(),
+    )
+    assert len(rows) == 51 * 2 and jobs <= 2, jobs
+    rows, jobs = _jobs_in(
+        spark, f"full-{uuid.uuid4().hex}", lambda: store.read_merged(spark).collect()
+    )
+    assert len(rows) == 400 and jobs <= 2, jobs
+
+
+def test_all_pruned_read_runs_no_job(spark, tmp_path):
+    """When every run is pruned the empty view comes from a recorded
+    schema: building and collecting it runs no Spark job, and it still has
+    the store's schema."""
+    import os
+    import uuid
+
+    store = _overlapping_store(spark, str(tmp_path / "runs"))
+    assert store.prune_runs(10_000, 20_000) == []
+    view, jobs = _jobs_in(
+        spark,
+        f"pruned-{uuid.uuid4().hex}",
+        lambda: store.read_merged(spark, key_lower=10_000, key_upper=20_000),
+    )
+    rows, collect_jobs = _jobs_in(spark, f"pruned-{uuid.uuid4().hex}", view.collect)
+    assert rows == [] and jobs == 0 and collect_jobs == 0
+    run0 = store.live_runs()[0]
+    assert view.schema == spark.read.parquet(os.path.join(store.root, run0)).schema
+
+
+def _strip_schemas(store, runs=None):
+    """Rewrite ``_STATS.json`` as a store written before runs recorded
+    their schema."""
+    import json
+    import os
+
+    for r in runs if runs is not None else store.live_runs():
+        p = os.path.join(store.root, r, "_STATS.json")
+        with open(p) as f:
+            st = json.load(f)
+        st.pop("schema")
+        with open(p, "w") as f:
+            json.dump(st, f)
+
+
+def test_runs_without_recorded_schema_still_read(spark, tmp_path):
+    """Stores written before runs carried their schema read the same rows,
+    bounded and full, through the per-run inference path."""
+    import uuid
+
+    store = _overlapping_store(spark, str(tmp_path / "runs"))
+
+    def views():
+        return [
+            sorted(store.read_merged(spark, key_lower=10, key_upper=60).collect()),
+            sorted(store.read_merged(spark).collect()),
+        ]
+
+    before = views()
+    _strip_schemas(store)
+    assert all("schema" not in s for s in store.run_stats().values())
+    assert views() == before
+    # each run is inferred on its own: at least one more job per run
+    _, jobs = _jobs_in(
+        spark, f"legacy-{uuid.uuid4().hex}", lambda: store.read_merged(spark).collect()
+    )
+    assert jobs >= 2 + len(store.live_runs()), jobs
+
+
+@pytest.mark.parametrize("legacy", ["none", "older", "all"])
+def test_schema_evolution_with_and_without_recorded_schema(spark, tmp_path, legacy):
+    """Runs with different recorded schemas stay separate scans, so the
+    evolution view (an older run without a later-added column) and both
+    merge checks — strict mismatch and a missing primary-key column — are
+    unchanged whether the runs record their schema, only the newer one
+    does, or none do."""
+    meta = TableMeta(("k",), (), "writetime")
+    store = RunStore(str(tmp_path / "evo"), meta)
+    older = store.append_run(
+        spark.createDataFrame([("a", 1), ("b", 1)], "k string, writetime bigint")
+    )
+    store.append_run(
+        spark.createDataFrame(
+            [("b", 2, "fresh"), ("c", 2, "new")], "k string, writetime bigint, note string"
+        )
+    )
+    if legacy != "none":
+        _strip_schemas(store, [older] if legacy == "older" else None)
+    with pytest.raises(Exception):
+        store.read_merged(spark)  # strict by default
+    view = {(r.k, r.note) for r in store.read_merged(
+        spark, allow_schema_evolution=True
+    ).collect()}
+    assert view == {("a", None), ("b", "fresh"), ("c", "new")}
+
+    # a run missing a KEY column is corrupt, not evolved
+    import os
+
+    bad = "r09999"
+    spark.createDataFrame([(3, "x")], "writetime bigint, note string").write.parquet(
+        os.path.join(store.root, bad)
+    )
+    store._write_stats(spark, os.path.join(store.root, bad))
+    store._commit([bad])
+    if legacy == "all":
+        _strip_schemas(store, [bad])
+    with pytest.raises(ValueError, match="key column"):
+        store.read_merged(spark, allow_schema_evolution=True)

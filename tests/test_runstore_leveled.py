@@ -403,9 +403,10 @@ def test_leveled_outputs_keep_full_skip_index(spark, tmp_path):
         assert "columns" in stats[r] and "day" in stats[r]["columns"], stats[r]
         # footer-derived stats equal a Spark aggregate over the chunk,
         # normalized like test_footer_stats_byte_compatible_with_spark_agg
-        rows, cols = store._spark_stats(spark, os.path.join(store.root, r))
+        rows, cols, schema = store._spark_stats(spark, os.path.join(store.root, r))
         agg = json.loads(json.dumps({"rows": rows, "columns": cols}, default=str))
         assert {k: stats[r][k] for k in ("rows", "columns")} == agg, r
+        assert stats[r]["schema"] == schema, r
     # the non-key-column read path still prunes/filters correctly
     got = store.read_merged(spark, extra_bounds={"day": (2, 2)})
     assert got.count() == 400
